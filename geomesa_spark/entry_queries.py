@@ -15,15 +15,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from geomesa_spark.geom import model
-from geomesa_spark.operators.knn import _haversine_col, knn_join
+from geomesa_spark.operators.knn import knn_join
 from geomesa_spark.operators.pip_join import pip_join_broadcast
+from geomesa_spark.operators.processes import haversine_col, haversine_sql
 from geomesa_spark.operators.tiling import density, tile_pyramid
 from geomesa_spark.plans.query import SpatialQuery
-from geomesa_spark.sources.testdata import (CLUST_LAT_EXPR, CLUST_LON_EXPR,
-                                            geo_events, geo_events_sql)
+from geomesa_spark.sources.testdata import geo_events, geo_events_sql
 
-EARTH_RADIUS_M = 6371008.8
 
 # ---------------------------------------------------------------------------
 # shared fixtures: polygons, query points (small, driver-side)
@@ -50,13 +48,6 @@ DWITHIN_RADIUS_M = 300_000.0
 
 BBOX = (40.0, 20.0, 50.0, 30.0)
 INTERVAL = ("2024-01-05 00:00:00", "2024-01-20 00:00:00")  # events span 2024-01
-
-
-def _haversine_sql(lon1: str, lat1: str, lon2: str, lat2: str) -> str:
-    return (f"2.0 * {EARTH_RADIUS_M} * asin(sqrt(least("
-            f"pow(sin((radians({lat2}) - radians({lat1})) / 2), 2) + "
-            f"cos(radians({lat1})) * cos(radians({lat2})) * "
-            f"pow(sin((radians({lon2}) - radians({lon1})) / 2), 2), 1.0)))")
 
 
 def _z2_norm_sql(x: str, lo: float, hi: float, bits: int) -> str:
@@ -109,44 +100,16 @@ POLY_DIAMOND = "POLYGON ((44 25, 46 21, 48 25, 46 29, 44 25))"
 
 
 def q_polygon_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTERSECTS with a non-rectangular polygon, two tagged index paths
-    that must return IDENTICAL rows (the cover property, driver-gated):
-
-    'native' — bbox prefilter + vectorized exact refine (the z2/z3-style
-    plan).  'gh' — a geohash-STRING-keyed layout scanned through the
-    GeohashUtils decomposition (geom/gh_decompose.py, the reference's
-    GeohashUtils.scala:241-409 planning path): decompose_geometry covers
-    the polygon with whole-character cells, cover_predicate compiles them
-    to an OR of prefix matches that Catalyst pushes to the parquet scan as
-    StringStartsWith filters (asserted in test_layout), and the same exact
-    refine trims the boundary cells."""
-    from geomesa_spark.geom.gh_decompose import (cover_predicate,
-                                                 decompose_geometry)
-    from geomesa_spark.sources import layout as lay
-    from geomesa_spark.sources.sigtable import cache_path
-
+    """INTERSECTS with a non-rectangular polygon: bbox prefilter +
+    vectorized exact refine (the z2/z3-style plan)."""
     df = geo_events(spark, sf_dir)
-    q = SpatialQuery(geometry=POLY_DIAMOND)
-    native = q.apply(df).select("event_id")
-
-    path = cache_path("events_gh", sf_dir, kind="layouts")
-    indexed = lay.ensure_indexed(df, path, cell="geohash")
-    cells = decompose_geometry(POLY_DIAMOND, max_size=32)
-    coarse = indexed.where(cover_predicate("gh", cells))
-    gh = SpatialQuery(geometry=POLY_DIAMOND).apply(coarse).select("event_id")
-
-    return (native.select(F.lit("native").alias("path"), "event_id")
-            .unionByName(gh.select(F.lit("gh").alias("path"), "event_id")))
+    return SpatialQuery(geometry=POLY_DIAMOND).apply(df).select("event_id")
 
 
 Q_POLYGON_FILTER_SQL = f"""
-{GEO}, m AS (
-  SELECT event_id FROM geo
-  WHERE abs(lon - 46.0) / 2.0 + abs(lat - 25.0) / 4.0 <= 1.0
-)
-SELECT 'native' AS path, event_id FROM m
-UNION ALL
-SELECT 'gh' AS path, event_id FROM m
+{GEO}
+SELECT event_id FROM geo
+WHERE abs(lon - 46.0) / 2.0 + abs(lat - 25.0) / 4.0 <= 1.0
 """
 
 
@@ -203,9 +166,9 @@ Q_KNN_SQL = f"""
     ('q_mid', -60.0, -30.0)) AS t(qid, qlon, qlat)
 ), ranked AS (
   SELECT q.qid, geo.event_id,
-         {_haversine_sql('geo.lon', 'geo.lat', 'q.qlon', 'q.qlat')} AS d,
+         {haversine_sql('geo.lon', 'geo.lat', 'q.qlon', 'q.qlat')} AS d,
          row_number() OVER (PARTITION BY q.qid ORDER BY
-             {_haversine_sql('geo.lon', 'geo.lat', 'q.qlon', 'q.qlat')}) AS rnk
+             {haversine_sql('geo.lon', 'geo.lat', 'q.qlon', 'q.qlat')}) AS rnk
   FROM geo CROSS JOIN q
 )
 SELECT qid, event_id, cast(rnk as int) AS knn_rank FROM ranked WHERE rnk <= 5
@@ -370,7 +333,7 @@ def q_dwithin(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = geo_events(spark, sf_dir)
     pred = None
     for alon, alat in DWITHIN_ANCHORS:
-        d = _haversine_col(F.col("lon"), F.col("lat"), F.lit(alon), F.lit(alat))
+        d = haversine_col(F.col("lon"), F.col("lat"), F.lit(alon), F.lit(alat))
         p = d <= DWITHIN_RADIUS_M
         pred = p if pred is None else (pred | p)
     return df.where(pred).select("event_id")
@@ -379,9 +342,9 @@ def q_dwithin(spark: SparkSession, sf_dir: str) -> DataFrame:
 Q_DWITHIN_SQL = f"""
 {GEO}
 SELECT event_id FROM geo
-WHERE {_haversine_sql('lon', 'lat', '46.0', '25.0')} <= 300000.0
-   OR {_haversine_sql('lon', 'lat', '-120.0', '40.0')} <= 300000.0
-   OR {_haversine_sql('lon', 'lat', '10.0', '-60.0')} <= 300000.0
+WHERE {haversine_sql('lon', 'lat', '46.0', '25.0')} <= 300000.0
+   OR {haversine_sql('lon', 'lat', '-120.0', '40.0')} <= 300000.0
+   OR {haversine_sql('lon', 'lat', '10.0', '-60.0')} <= 300000.0
 """
 
 
@@ -409,8 +372,8 @@ def q_point2point(spark: SparkSession, sf_dir: str) -> DataFrame:
     great-circle length)."""
     df = geo_events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seg = _haversine_col(F.lag("lon").over(w), F.lag("lat").over(w),
-                         F.col("lon"), F.col("lat"))
+    seg = haversine_col(F.lag("lon").over(w), F.lag("lat").over(w),
+                        F.col("lon"), F.col("lat"))
     return (df.withColumn("seg_m", seg)
             .groupBy("user_id")
             .agg(F.count("seg_m").alias("n_segments"),
@@ -425,7 +388,7 @@ Q_POINT2POINT_SQL = f"""
 )
 SELECT user_id, count(*) FILTER (WHERE plon IS NOT NULL) AS n_segments,
        round(sum(CASE WHEN plon IS NULL THEN NULL
-                 ELSE {_haversine_sql('plon', 'plat', 'lon', 'lat')} END) / 1000.0, 1) AS track_km
+                 ELSE {haversine_sql('plon', 'plat', 'lon', 'lat')} END) / 1000.0, 1) AS track_km
 FROM s GROUP BY user_id
 """
 

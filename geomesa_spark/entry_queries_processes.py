@@ -35,16 +35,6 @@ ROUTE = [("r0", 45.0, 24.0, 45.0), ("r1", 46.0, 25.0, 45.0),
 ROUTE_RADIUS_M = 400_000.0
 ROUTE_TOL_DEG = 60.0
 
-_EARTH = proc.EARTH_RADIUS_M
-
-
-def _hav(lon1: str, lat1: str, lon2: str, lat2: str) -> str:
-    return (f"2.0 * {_EARTH!r} * asin(sqrt(least("
-            f"pow(sin((radians({lat2}) - radians({lat1})) / 2), 2) + "
-            f"cos(radians({lat1})) * cos(radians({lat2})) * "
-            f"pow(sin((radians({lon2}) - radians({lon1})) / 2), 2), 1.0)))")
-
-
 def _bearing(lon1: str, lat1: str, lon2: str, lat2: str) -> str:
     return (f"(degrees(atan2("
             f"sin(radians({lon2}) - radians({lon1})) * cos(radians({lat2})), "
@@ -69,7 +59,7 @@ def _prox_sql() -> str:
 {GEO}, a AS (SELECT * FROM (VALUES {anchors}) t(qid, alon, alat))
 SELECT a.qid, geo.event_id
 FROM geo CROSS JOIN a
-WHERE {_hav('geo.lon', 'geo.lat', 'a.alon', 'a.alat')} <= {PROX_RADIUS_M!r}
+WHERE {proc.haversine_sql('geo.lon', 'geo.lat', 'a.alon', 'a.alat')} <= {PROX_RADIUS_M!r}
 """
 
 
@@ -92,7 +82,7 @@ SELECT geo.event_id, count(*) AS n_waypoints
 FROM geo JOIN w
   ON abs(CAST(floor(epoch(geo.ts)) AS BIGINT)
          - CAST(floor(epoch(w.wts)) AS BIGINT)) <= {TUBE_DT_S}
- AND {_hav('geo.lon', 'geo.lat', 'w.wlon', 'w.wlat')} <= {TUBE_RADIUS_M!r}
+ AND {proc.haversine_sql('geo.lon', 'geo.lat', 'w.wlon', 'w.wlat')} <= {TUBE_RADIUS_M!r}
 GROUP BY geo.event_id
 """
 
@@ -123,7 +113,7 @@ h AS (
 r AS (SELECT * FROM (VALUES {rt}) t(rid, rlon, rlat, rbearing))
 SELECT DISTINCT h.event_id, r.rid
 FROM h CROSS JOIN r
-WHERE {_hav('h.lon', 'h.lat', 'r.rlon', 'r.rlat')} <= {ROUTE_RADIUS_M!r}
+WHERE {proc.haversine_sql('h.lon', 'h.lat', 'r.rlon', 'r.rlat')} <= {ROUTE_RADIUS_M!r}
   AND least(abs(h.heading - r.rbearing),
             360.0e0 - abs(h.heading - r.rbearing)) <= {ROUTE_TOL_DEG!r}
 """
@@ -677,16 +667,12 @@ WHERE xmax >= 40.0 AND xmin <= 50.0 AND ymax >= 20.0 AND ymin <= 30.0
 
 
 def q_density_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Line rasterization, two tagged renderers over the same segments.
-
-    kind='dda': pure-Catalyst sub-cell DDA (the engine's default line
-    renderer).  kind='bres': the reference's EXACT cell walk
-    (operators/tiling.density_lines_bresenham — GridSnap.bresenhamLine's
-    float64 error accumulation and endpoint exclusion, bit-for-bit); its
-    oracle replays the identical IEEE ops in a DuckDB recursive CTE, so a
-    single drifted increment anywhere in the walk fails the hash."""
-    from geomesa_spark.operators.tiling import (density_lines,
-                                                density_lines_bresenham)
+    """Line rasterization with the reference's EXACT cell walk
+    (operators/tiling.density_lines — GridSnap.bresenhamLine's float64
+    error accumulation and endpoint exclusion, bit-for-bit); its oracle
+    replays the identical IEEE ops in a DuckDB recursive CTE, so a single
+    drifted increment anywhere in the walk fails the hash."""
+    from geomesa_spark.operators.tiling import density_lines
     geo = geo_events(spark, sf_dir)
     trk = Window.partitionBy("user_id").orderBy("ts", "event_id")
     segs = (geo
@@ -695,13 +681,8 @@ def q_density_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
             .where(F.col("x2").isNotNull())
             .selectExpr("lon AS x1", "lat AS y1", "x2", "y2"))
     env = (40.0, 20.0, 50.0, 30.0)
-    dda = density_lines(segs, env, 128, 128)
-    bres = density_lines_bresenham(segs, env, 128, 128)
-    return (dda.select(F.lit("dda").alias("kind"), "px", "py",
-                       F.col("weight").cast("long").alias("w"))
-            .unionByName(bres.select(
-                F.lit("bres").alias("kind"), "px", "py",
-                F.col("weight").cast("long").alias("w"))))
+    return density_lines(segs, env, 128, 128).select(
+        "px", "py", F.col("weight").cast("long").alias("w"))
 
 
 Q_DENSITY_LINES_SQL = f"""
@@ -718,33 +699,15 @@ f AS (
     AND x1 BETWEEN 40.0 AND 50.0 AND x2 BETWEEN 40.0 AND 50.0
     AND y1 BETWEEN 20.0 AND 30.0 AND y2 BETWEEN 20.0 AND 30.0
 ),
-p AS (
-  SELECT least(greatest((x1 - 40.0e0) / 10.0e0 * 128, 0.0e0), 128 - 1e-9) AS ax,
-         least(greatest((y1 - 20.0e0) / 10.0e0 * 128, 0.0e0), 128 - 1e-9) AS ay,
-         least(greatest((x2 - 40.0e0) / 10.0e0 * 128, 0.0e0), 128 - 1e-9) AS bx,
-         least(greatest((y2 - 20.0e0) / 10.0e0 * 128, 0.0e0), 128 - 1e-9) AS by
-  FROM f
-),
-n AS (
-  SELECT ax, ay, bx, by,
-         CAST(greatest(abs(floor(bx) - floor(ax)),
-                       abs(floor(by) - floor(ay)), 0) AS INT) AS n
-  FROM p
-),
-pix AS (
-  SELECT unnest(list_distinct(list_transform(range(0, n + 1), i ->
-           CAST(floor(ax + (bx - ax) * i / greatest(n, 1)) AS BIGINT) * 128
-           + CAST(floor(ay + (by - ay) * i / greatest(n, 1)) AS BIGINT)))) AS pix
-  FROM n
-),
--- 'bres': integer-cell endpoints, then the reference's bresenhamLine walk
--- replayed with the SAME float64 ops in the SAME order (err + dErr, >= 0.5,
--- err - 1.0) — bit-identical to the engine's numpy walk and the JVM's.
+-- integer-cell endpoints (GridSnap.i/j: floor((v - min) / (span / 128))),
+-- then the reference's bresenhamLine walk replayed with the SAME float64
+-- ops in the SAME order (err + dErr, >= 0.5, err - 1.0) — bit-identical
+-- to the engine's numpy walk and the JVM's.
 cells AS (
-  SELECT CAST(least(floor((x1 - 40.0e0) / 10.0e0 * 128), 127) AS BIGINT) AS ix0,
-         CAST(least(floor((y1 - 20.0e0) / 10.0e0 * 128), 127) AS BIGINT) AS iy0,
-         CAST(least(floor((x2 - 40.0e0) / 10.0e0 * 128), 127) AS BIGINT) AS ix1,
-         CAST(least(floor((y2 - 20.0e0) / 10.0e0 * 128), 127) AS BIGINT) AS iy1,
+  SELECT CAST(least(floor((x1 - 40.0e0) / (10.0e0 / 128)), 127) AS BIGINT) AS ix0,
+         CAST(least(floor((y1 - 20.0e0) / (10.0e0 / 128)), 127) AS BIGINT) AS iy0,
+         CAST(least(floor((x2 - 40.0e0) / (10.0e0 / 128)), 127) AS BIGINT) AS ix1,
+         CAST(least(floor((y2 - 20.0e0) / (10.0e0 / 128)), 127) AS BIGINT) AS iy1,
          row_number() OVER () AS seg
   FROM f
 ),
@@ -779,13 +742,7 @@ walk AS (
   )
   SELECT x * 128 + y AS pix FROM w
 )
-SELECT 'dda' AS kind, CAST(pix // 128 AS INT) AS px,
-       CAST(pix % 128 AS INT) AS py,
-       CAST(count(*) AS BIGINT) AS w
-FROM pix GROUP BY pix
-UNION ALL
-SELECT 'bres' AS kind, CAST(pix // 128 AS INT) AS px,
-       CAST(pix % 128 AS INT) AS py,
+SELECT CAST(pix // 128 AS INT) AS px, CAST(pix % 128 AS INT) AS py,
        CAST(count(*) AS BIGINT) AS w
 FROM walk GROUP BY pix
 """

@@ -25,7 +25,7 @@ Design notes for 100 TB:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 # marching-squares case table.  Corner bits: 1=p00 (bottom-left),
 # 2=p10 (bottom-right), 4=p11 (top-right), 8=p01 (top-left).

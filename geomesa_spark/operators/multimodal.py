@@ -30,7 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from geomesa_spark.sources.images import decode_image, encode_image, psnr
+from geomesa_spark.sources.images import decode_image, psnr
 
 
 def _decode(blob: bytes) -> np.ndarray:

@@ -28,7 +28,6 @@ from geomesa_spark.functions.cell_functions import salt_col
 from geomesa_spark.geom import algos, model, wkt
 from geomesa_spark.geom.wkb import wkb_loads
 from geomesa_spark.plans.cover import geometry_cell_cover, pick_cover_resolution
-from geomesa_spark.plans.query import _is_rectangle
 
 DEFAULT_SALTS = 4  # geomesa.z.splits default (Conversions.scala:307-318)
 
@@ -48,6 +47,50 @@ def _convex_ccw(g) -> "np.ndarray | None":
     if np.all(cross <= 0):
         return v[::-1]
     return None
+
+
+def _edges(g) -> tuple[bool, list]:
+    """(convex, edges) input of :func:`_refine_sql` for one polygonal
+    geometry: a convex polygon's CCW ring, else every shell and hole ring
+    of its polygon components, as (ax, ay, bx, by) tuples."""
+    ccw = _convex_ccw(g)
+    if ccw is not None:
+        rings = [np.vstack([ccw, ccw[:1]])]
+    else:
+        rings = []
+        for comp in g._components():
+            if isinstance(comp, model.Polygon):
+                rings.append(np.asarray(comp.shell, dtype=np.float64))
+                rings.extend(np.asarray(h, dtype=np.float64)
+                             for h in comp.holes)
+    edges = []
+    for arr in rings:
+        for i in range(len(arr) - 1):
+            edges.append((float(arr[i][0]), float(arr[i][1]),
+                          float(arr[i + 1][0]), float(arr[i + 1][1])))
+    return ccw is not None, edges
+
+
+def _refine_sql(lon: str, lat: str) -> str:
+    """Exact boundary-inclusive intersects over the ``__convex`` /
+    ``__edges`` columns built by :func:`_edges`.  Convex: half-plane
+    conjunction (cheap forall); general: even-odd ray cast replicating
+    algos.points_in_ring term-for-term, one aggregate() — bit-identical to
+    the pandas kernel."""
+    return f"""
+            IF(__convex,
+              forall(__edges, e -> (e.bx - e.ax) * ({lat} - e.ay)
+                                   - (e.by - e.ay) * ({lon} - e.ax) >= 0.0),
+              aggregate(__edges,
+                named_struct('i', false, 'b', false),
+                (acc, e) -> named_struct(
+                  'i', acc.i != (((e.ay > {lat}) != (e.by > {lat})) AND
+                          ({lon} < e.ax + ({lat} - e.ay) * (e.bx - e.ax) / (e.by - e.ay))),
+                  'b', acc.b OR ((e.bx - e.ax) * ({lat} - e.ay)
+                                 - (e.by - e.ay) * ({lon} - e.ax) = 0.0
+                          AND {lon} >= least(e.ax, e.bx) AND {lon} <= greatest(e.ax, e.bx)
+                          AND {lat} >= least(e.ay, e.by) AND {lat} <= greatest(e.ay, e.by))),
+                acc -> acc.b OR acc.i))"""
 
 
 def _polygons_to_local(polygons) -> list[tuple]:
@@ -217,45 +260,12 @@ def pip_join_broadcast(points: DataFrame, polygons, *, res: int | None = None,
     # results are bit-identical to the pandas kernel.
     if predicate == "intersects" and all(
             isinstance(g, (model.Polygon, model.MultiPolygon)) for g in geoms):
-        edge_rows = []
-        for k, g in enumerate(geoms):
-            ccw = _convex_ccw(g)
-            edges = []
-            if ccw is not None:
-                ring_list = [np.vstack([ccw, ccw[:1]])]
-            else:
-                ring_list = []
-                for comp in g._components():
-                    ring_list.append(np.asarray(comp.shell, dtype=np.float64))
-                    ring_list.extend(np.asarray(h, dtype=np.float64)
-                                     for h in comp.holes)
-            for arr in ring_list:
-                for i in range(len(arr) - 1):
-                    edges.append((float(arr[i][0]), float(arr[i][1]),
-                                  float(arr[i + 1][0]), float(arr[i + 1][1])))
-            edge_rows.append((k, polys[k][0], ccw is not None, edges))
+        edge_rows = [(k, polys[k][0], *_edges(g)) for k, g in enumerate(geoms)]
         edges_df = spark.createDataFrame(
             edge_rows,
             f"__pidx int, {poly_id_col} {id_type}, __convex boolean, "
             "__edges array<struct<ax:double,ay:double,bx:double,by:double>>")
-        lon, lat = lon_col, lat_col
-        # convex: boundary-inclusive half-plane conjunction (cheap forall);
-        # general: even-odd ray cast replicating algos.points_in_ring
-        # term-for-term (boundary-inclusive), one aggregate()
-        refine = F.expr(f"""
-            IF(__convex,
-              forall(__edges, e -> (e.bx - e.ax) * ({lat} - e.ay)
-                                   - (e.by - e.ay) * ({lon} - e.ax) >= 0.0),
-              aggregate(__edges,
-                named_struct('i', false, 'b', false),
-                (acc, e) -> named_struct(
-                  'i', acc.i != (((e.ay > {lat}) != (e.by > {lat})) AND
-                          ({lon} < e.ax + ({lat} - e.ay) * (e.bx - e.ax) / (e.by - e.ay))),
-                  'b', acc.b OR ((e.bx - e.ax) * ({lat} - e.ay)
-                                 - (e.by - e.ay) * ({lon} - e.ax) = 0.0
-                          AND {lon} >= least(e.ax, e.bx) AND {lon} <= greatest(e.ax, e.bx)
-                          AND {lat} >= least(e.ay, e.by) AND {lat} <= greatest(e.ay, e.by))),
-                acc -> acc.b OR acc.i))""")
+        refine = F.expr(_refine_sql(lon_col, lat_col))
         out = (joined.join(F.broadcast(edges_df), "__pidx")
                .where(F.col("__interior") | refine))
         return _attach_geom(spark, out.drop("__pidx", "__interior",
@@ -292,11 +302,6 @@ def _attach_geom(spark, out: DataFrame, polys, poly_id_col: str,
         [(pid, bytearray(wkb_dumps(g))) for pid, g, _b in polys],
         f"{poly_id_col} {id_type}, __geom binary")
     return out.join(F.broadcast(geom_df), poly_id_col)
-
-
-def _bbox_covers(outer: tuple, inner: tuple) -> bool:
-    return (outer[0] <= inner[0] and outer[1] <= inner[1]
-            and outer[2] >= inner[2] and outer[3] >= inner[3])
 
 
 def pip_join_smj(points: DataFrame, polygons: DataFrame, *, res: int,
@@ -353,27 +358,9 @@ def pip_join_smj(points: DataFrame, polygons: DataFrame, *, res: int,
              StructField("bx", DoubleType()), StructField("by", DoubleType())])))])
 
     def prep_udf(wkb_s: pd.Series) -> pd.DataFrame:
-        convex, edges_out = [], []
-        for b in wkb_s:
-            g = wkb_loads(bytes(b))
-            ccw = _convex_ccw(g)
-            if ccw is not None:
-                rings = [np.vstack([ccw, ccw[:1]])]
-            else:
-                rings = []
-                for comp in g._components():
-                    if isinstance(comp, model.Polygon):
-                        rings.append(np.asarray(comp.shell, dtype=np.float64))
-                        rings.extend(np.asarray(h, dtype=np.float64)
-                                     for h in comp.holes)
-            edges = []
-            for arr in rings:
-                for i in range(len(arr) - 1):
-                    edges.append((float(arr[i][0]), float(arr[i][1]),
-                                  float(arr[i + 1][0]), float(arr[i + 1][1])))
-            convex.append(ccw is not None)
-            edges_out.append(edges)
-        return pd.DataFrame({"convex": convex, "edges": edges_out})
+        prepped = [_edges(wkb_loads(bytes(b))) for b in wkb_s]
+        return pd.DataFrame({"convex": [c for c, _e in prepped],
+                             "edges": [e for _c, e in prepped]})
 
     covers = (polygons
               .withColumn("__cov", F.pandas_udf(cover_udf, cover_type)(F.col(poly_wkb_col)))
@@ -397,21 +384,7 @@ def pip_join_smj(points: DataFrame, polygons: DataFrame, *, res: int,
            .withColumn("__salt", salt_col(F.col(lon_col) + F.col(lat_col), n_salts)))
 
     joined = pts.join(poly_cells.hint("shuffle_merge"), ["__cell", "__salt"], "inner")
-    lon, lat = lon_col, lat_col
-    refine = F.expr(f"""
-        __interior OR IF(__convex,
-          forall(__edges, e -> (e.bx - e.ax) * ({lat} - e.ay)
-                               - (e.by - e.ay) * ({lon} - e.ax) >= 0.0),
-          aggregate(__edges,
-            named_struct('i', false, 'b', false),
-            (acc, e) -> named_struct(
-              'i', acc.i != (((e.ay > {lat}) != (e.by > {lat})) AND
-                      ({lon} < e.ax + ({lat} - e.ay) * (e.bx - e.ax) / (e.by - e.ay))),
-              'b', acc.b OR ((e.bx - e.ax) * ({lat} - e.ay)
-                             - (e.by - e.ay) * ({lon} - e.ax) = 0.0
-                      AND {lon} >= least(e.ax, e.bx) AND {lon} <= greatest(e.ax, e.bx)
-                      AND {lat} >= least(e.ay, e.by) AND {lat} <= greatest(e.ay, e.by))),
-            acc -> acc.b OR acc.i))""")
+    refine = F.col("__interior") | F.expr(_refine_sql(lon_col, lat_col))
     if predicate != "intersects":
         raise ValueError("pip_join_smj supports the intersects predicate")
     refined = joined.where(refine)

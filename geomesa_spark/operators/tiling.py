@@ -190,55 +190,6 @@ def density_boxes(df: DataFrame, envelope: tuple, width: int, height: int, *,
             .agg(F.sum("__w").alias("weight")))
 
 
-def density_lines(df: DataFrame, envelope: tuple, width: int, height: int, *,
-                  x1_col: str = "x1", y1_col: str = "y1",
-                  x2_col: str = "x2", y2_col: str = "y2",
-                  weight: Column | str | None = None) -> DataFrame:
-    """Density grid for LINE-SEGMENT rows: every pixel a segment passes
-    through gets the row's weight once (DensityScan's line renderer,
-    RenderingGrid.render(LineString) — Bresenham-style walk).
-
-    Pure Catalyst DDA: n = chebyshev pixel span; pixel_i = floor(linear
-    interpolation at i/n in continuous pixel space), deduped per segment
-    (a near-diagonal step may revisit a pixel) via array_distinct on the
-    packed pixel id.  The step count is bounded by width+height, so the
-    explode is bounded per row regardless of data — scale-safe.  Segments
-    are required to lie inside the envelope (clipping composes upstream
-    with st_intersection against the envelope box).
-    """
-    exmin, eymin, exmax, eymax = envelope
-    w = F.lit(1.0) if weight is None else (F.col(weight) if isinstance(weight, str) else weight)
-
-    def fpix(col, lo, hi, n_px):
-        # continuous pixel coordinate, clamped inside the grid
-        frac = (col - F.lit(lo)) / F.lit(hi - lo) * F.lit(n_px)
-        return F.least(F.greatest(frac, F.lit(0.0)), F.lit(n_px - 1e-9))
-
-    inside = (F.col(x1_col).between(exmin, exmax) & F.col(x2_col).between(exmin, exmax)
-              & F.col(y1_col).between(eymin, eymax) & F.col(y2_col).between(eymin, eymax))
-    out = (df.where(inside)
-           .withColumn("__ax", fpix(F.col(x1_col), exmin, exmax, width))
-           .withColumn("__ay", fpix(F.col(y1_col), eymin, eymax, height))
-           .withColumn("__bx", fpix(F.col(x2_col), exmin, exmax, width))
-           .withColumn("__by", fpix(F.col(y2_col), eymin, eymax, height))
-           .withColumn("__n", F.greatest(
-               F.abs(F.floor("__bx") - F.floor("__ax")),
-               F.abs(F.floor("__by") - F.floor("__ay")),
-               F.lit(0)).cast("int"))
-           .withColumn("__w", w)
-           .withColumn("__pix", F.expr(f"""
-               array_distinct(transform(sequence(0, __n), i ->
-                 cast(floor(__ax + (__bx - __ax) * i / greatest(__n, 1)) AS bigint) * {height}
-                 + cast(floor(__ay + (__by - __ay) * i / greatest(__n, 1)) AS bigint)))"""))
-           .select(F.explode("__pix").alias("pix"), "__w")
-           .groupBy("pix")
-           .agg(F.sum("__w").alias("weight"))
-           .select((F.col("pix") / height).cast("int").alias("px"),
-                   F.pmod(F.col("pix"), F.lit(height)).cast("int").alias("py"),
-                   "weight"))
-    return out
-
-
 def bresenham_pixels(x0, y0, x1, y1):
     """The reference's EXACT cell walk between two snapped grid cells
     (GridSnap.scala:95-130 ``bresenhamLine``), vectorized across segments.
@@ -303,11 +254,10 @@ def bresenham_pixels(x0, y0, x1, y1):
             np.concatenate(j_out))
 
 
-def density_lines_bresenham(df: DataFrame, envelope: tuple, width: int,
-                            height: int, *,
-                            x1_col: str = "x1", y1_col: str = "y1",
-                            x2_col: str = "x2", y2_col: str = "y2",
-                            weight: Column | str | None = None) -> DataFrame:
+def density_lines(df: DataFrame, envelope: tuple, width: int, height: int, *,
+                  x1_col: str = "x1", y1_col: str = "y1",
+                  x2_col: str = "x2", y2_col: str = "y2",
+                  weight: Column | str | None = None) -> DataFrame:
     """Line-segment density with the reference's EXACT pixel walk
     (RenderingGrid.scala:72-140 render(LineString)): endpoints snap to
     integer cells first (GridSnap.i/j floor + clamp), then the float-error
@@ -316,11 +266,10 @@ def density_lines_bresenham(df: DataFrame, envelope: tuple, width: int,
     segment's final cell is NOT rendered; in a polyline the next segment's
     start writes it).
 
-    :func:`density_lines` remains the default renderer (pure-Catalyst DDA,
-    sub-cell-aware, endpoint-inclusive — oracle-checked); this variant is
-    for row-for-row parity with the reference's RenderingGrid output.
-    Arrow-batched pandas UDF, one walk per segment, cells bounded by
-    width+height per row — no per-row Python in any other stage.
+    Segments must lie inside the envelope (clipping composes upstream with
+    st_intersection against the envelope box).  Arrow-batched pandas UDF,
+    one walk per segment, cells bounded by width+height per row — no
+    per-row Python in any other stage.
     """
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -329,8 +278,9 @@ def density_lines_bresenham(df: DataFrame, envelope: tuple, width: int,
     w = F.lit(1.0) if weight is None else (F.col(weight) if isinstance(weight, str) else weight)
 
     def cell(col, lo, hi, n_px):
-        # GridSnap.i/j: floor((v - min) / d), upper edge into the last cell
-        frac = F.floor((col - F.lit(lo)) / F.lit(hi - lo) * F.lit(n_px))
+        # GridSnap.i/j: floor((v - min) / d) with d = (max - min) / size, in
+        # that division order; the upper edge goes into the last cell
+        frac = F.floor((col - F.lit(lo)) / F.lit((hi - lo) / n_px))
         return F.least(frac, F.lit(n_px - 1)).cast("long")
 
     # NO parameter annotations: `from __future__ import annotations`
@@ -400,15 +350,6 @@ def density_polygons(spark, polygons: list[tuple], envelope: tuple,
         hit = hit.withColumn("__w", F.lit(1.0))
     return (hit.groupBy("px", "py")
             .agg(F.sum("__w").alias("weight")))
-
-
-def write_tile_pyramid(df: DataFrame, path: str, zooms: list[int], **kwargs) -> None:
-    """Materialize the pyramid partitioned by zoom (partition pruning on read)."""
-    tiles = tile_pyramid(df, zooms, **kwargs)
-    (tiles
-     .repartition("zoom", "tx")
-     .sortWithinPartitions("zoom", "tx", "ty", "px", "py")
-     .write.mode("overwrite").partitionBy("zoom").parquet(path))
 
 
 PIX_CHECK_MOD = 1_000_000_007  # pix_check modulus (shared with the oracle)

@@ -18,7 +18,6 @@ from __future__ import annotations
 from functools import reduce
 
 from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 from geomesa_spark.cells import grid
 from geomesa_spark.cells.z2 import Z2SFC

@@ -164,8 +164,11 @@ def apply_sampling(df, percent: float, by: str | None = None,
     (SAMPLE_BY): hashing (key, row-id) keeps ~1/n of EACH key's rows —
     every key group keeps its share, rather than whole keys being
     dropped."""
+    import numpy as np
     from pyspark.sql import functions as F
-    n = max(1, round(1.0 / percent))
+    # the reference's (1 / percent.toFloat).toInt: float32 division, then
+    # truncation (28% keeps 1 row in 3, not 1 in 4)
+    n = max(1, int(np.float32(1.0) / np.float32(percent)))
     row = F.col(id_col).cast("string")
     key = F.concat_ws("|", F.col(by).cast("string"), row) \
         if by is not None else row

@@ -15,7 +15,7 @@ index primary + residual (planning/FilterSplitter.scala:61-147):
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Optional, Union
 
 import numpy as np

@@ -24,7 +24,6 @@ long tail:
 
 from __future__ import annotations
 
-import os
 import struct
 
 from pyspark.sql import Column, DataFrame
@@ -303,14 +302,3 @@ def decode_bin(blob: bytes, has_label: bool = False):
     if has_label:
         dtype.append(("label", "<i8"))
     return np.frombuffer(blob, dtype=np.dtype(dtype))
-
-
-def write_bin(df: DataFrame, path: str, track_col: str, ts_col: str,
-              lat_col: str, lon_col: str,
-              label_col: str | None = None) -> None:
-    """Distributed BIN export: per-partition packed chunks as parquet
-    (n_records, bytes) — concatenating the `bytes` columns in any order
-    yields a valid BIN stream, exactly like the reference's aggregated
-    per-feature blobs."""
-    bin_pack(df, track_col, ts_col, lat_col, lon_col,
-             label_col).write.mode("overwrite").parquet(path)

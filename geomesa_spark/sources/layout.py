@@ -22,7 +22,6 @@ the classpath):
 from __future__ import annotations
 
 import json
-import os
 import time
 import uuid
 from dataclasses import dataclass
@@ -36,6 +35,11 @@ MANIFEST = "_manifest.json"
 
 # cell-curve kind -> the key column it writes
 _CELL_COLUMNS = {"z2": "z2", "s2": "s2", "geohash": "gh"}
+
+
+def _salt_key(id_col: str | None, lon_col: str, n_salts: int) -> str | None:
+    """The column whose hash salts the rows: id_col when one is given."""
+    return (id_col if id_col else lon_col) if n_salts > 0 else None
 
 
 def write_indexed(df: DataFrame, path: str, *, period: str = "week",
@@ -70,9 +74,9 @@ def write_indexed(df: DataFrame, path: str, *, period: str = "week",
         out = out.withColumn("time_bin", time_bin_col(F.col(ts_col), period))
     else:
         out = out.withColumn("time_bin", F.lit(0))
-    if n_salts > 0:
-        key = F.col(id_col) if id_col else F.col(lon_col)
-        out = out.withColumn("salt", salt_col(key, n_salts))
+    salt_key = _salt_key(id_col, lon_col, n_salts)
+    if salt_key is not None:
+        out = out.withColumn("salt", salt_col(F.col(salt_key), n_salts))
 
     n = target_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     cell_name = _CELL_COLUMNS[cell]
@@ -85,7 +89,7 @@ def write_indexed(df: DataFrame, path: str, *, period: str = "week",
         "period": period, "lon_col": lon_col, "lat_col": lat_col,
         "ts_col": ts_col, "n_salts": n_salts, "format": fmt, "cell": cell,
         # record WHICH key salted the rows so appends stay consistent
-        "salt_key": (id_col if id_col else lon_col) if n_salts > 0 else None,
+        "salt_key": salt_key,
         "columns": df.columns,
     }
     _write_text(spark, f"{path}/{MANIFEST}", json.dumps(manifest))
@@ -102,18 +106,20 @@ def ensure_indexed(df: DataFrame, path: str, *, period: str = "week",
     The write_ivf_index pattern (operators/ann.py): a deployment builds the
     layout at ingest and queries only scan it — rebuilding a deterministic
     layout per query measures the writer, not the query plan.  The manifest
-    check covers every parameter that shapes the table (cell curve, period,
-    salts, format, source columns); same-shaped but different DATA at the
+    check covers every parameter that shapes the table's rows and keys
+    (cell curve, period, salt count and salt key, format, source columns);
+    ``target_partitions`` is not compared, because it changes the file
+    count but not the rows or keys.  Same-shaped but different DATA at the
     same path is the caller's contract, exactly as for the IVF index.
     """
     spark = df.sparkSession
     try:
         m = read_manifest(spark, path)
         if (m.get("period"), m.get("cell"), m.get("n_salts"),
-                m.get("format"), m.get("columns"), m.get("lon_col"),
-                m.get("lat_col"), m.get("ts_col")) == \
-                (period, cell, n_salts, fmt, df.columns,
-                 lon_col, lat_col, ts_col):
+                m.get("salt_key"), m.get("format"), m.get("columns"),
+                m.get("lon_col"), m.get("lat_col"), m.get("ts_col")) == \
+                (period, cell, n_salts, _salt_key(id_col, lon_col, n_salts),
+                 fmt, df.columns, lon_col, lat_col, ts_col):
             return read_indexed(spark, path)
     except Exception:
         pass

@@ -17,7 +17,6 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from geomesa_spark.sources.images import encode_image
 

@@ -7,8 +7,8 @@ The engine analog: Spark's kafka source (`readStream.format("kafka")`)
 delivering (key, value, topic, partition, offset, timestamp) rows, with
 feature payloads decoded from the value column — JSON-encoded features
 here (the reference supports several SerDes; JSON is its
-`LazySimpleFeatureSerDe` analog) — composed with
-`upsert.latest_feature_state` for the live view.
+`LazySimpleFeatureSerDe` analog).  The live view is the decoded stream,
+tombstones (`__tombstone`) dropped, fed to `upsert.latest_feature_state`.
 
 The payload decode (`parse_feature_messages`) is pure Catalyst and is
 unit-tested against static DataFrames shaped like kafka batches; the
@@ -23,8 +23,6 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from geomesa_spark.streaming.upsert import latest_feature_state
 
 KAFKA_COLUMNS = ("key", "value", "topic", "partition", "offset",
                  "timestamp", "timestampType")
@@ -87,16 +85,3 @@ def kafka_stream(spark: SparkSession, bootstrap_servers: str, topic: str,
             "on the classpath (add org.apache.spark:spark-sql-kafka-0-10 via "
             "--packages) or the broker is unreachable") from e
     return parse_feature_messages(raw, value_schema, key_col)
-
-
-def kafka_live_view(spark: SparkSession, bootstrap_servers: str, topic: str,
-                    value_schema: str, key_col: str = "fid",
-                    ts_col: str = "ts",
-                    ttl_seconds: Optional[int] = None) -> DataFrame:
-    """The full KafkaDataStore live layer: topic -> decode -> upsert state.
-
-    Tombstones are dropped before the state update (the reference removes
-    the cache entry; state TTL covers expiry here)."""
-    feats = kafka_stream(spark, bootstrap_servers, topic, value_schema, key_col)
-    live = feats.where(~F.col("__tombstone")).drop("__tombstone")
-    return latest_feature_state(live, key_col, ts_col, ttl_seconds=ttl_seconds)

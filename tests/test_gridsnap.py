@@ -197,7 +197,7 @@ def test_density_lines_bresenham_operator(spark):
     endpoint-exclusion and per-pixel weight accumulation across rows."""
     from collections import Counter
 
-    from geomesa_spark.operators.tiling import density_lines_bresenham
+    from geomesa_spark.operators.tiling import density_lines
 
     env = (0.0, 0.0, 10.0, 10.0)
     w = h = 10  # dx = dy = 1.0: cell index == floor(coordinate)
@@ -207,7 +207,7 @@ def test_density_lines_bresenham_operator(spark):
             (0.0, 0.0, 10.0, 0.0, 1.0)]  # max edge clamps into cell 9
     df = spark.createDataFrame(rows, "x1 double, y1 double, x2 double, y2 double, w double")
     got = {(r.px, r.py): r.weight
-           for r in density_lines_bresenham(df, env, w, h, weight="w").collect()}
+           for r in density_lines(df, env, w, h, weight="w").collect()}
 
     expect = Counter()
     for x1, y1, x2, y2, wt in rows:
@@ -216,3 +216,17 @@ def test_density_lines_bresenham_operator(spark):
         for px, py in _scalar_bresenham(cell(x1), cell(y1), cell(x2), cell(y2)):
             expect[(px, py)] += wt
     assert got == {k: float(v) for k, v in expect.items()}
+
+
+def test_density_lines_snaps_in_gridsnap_division_order(spark):
+    """GridSnap.j divides by the cell size, floor((y - ymin) / dy) with
+    dy = (ymax - ymin) / height.  Scaling the fraction by height instead,
+    floor((y - ymin) / (ymax - ymin) * height), rounds y = -75.78 on a
+    1000-cell [-90, 90] axis to cell 78 instead of the reference's 79."""
+    from geomesa_spark.operators.tiling import density_lines
+
+    env = (-180.0, -90.0, 180.0, 90.0)
+    df = spark.createDataFrame([(0.0, -75.78, 0.0, -75.78)],
+                               "x1 double, y1 double, x2 double, y2 double")
+    got = [(r.px, r.py) for r in density_lines(df, env, 1000, 1000).collect()]
+    assert got == [(500, 79)]

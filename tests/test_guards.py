@@ -179,6 +179,20 @@ def test_apply_sampling_keeps_per_key_share(spark):
     assert out.count() == apply_sampling(df, 0.25, by="name").count()
 
 
+def test_apply_sampling_truncates_one_over_percent(spark):
+    """The reference keeps 1 row in (1 / percent.toFloat).toInt: 28%
+    truncates 3.57 to 3 (rounding would keep 1 in 4)."""
+    df = spark.createDataFrame([(i,) for i in range(3000)], "event_id long")
+
+    def ids(percent):
+        return {r.event_id for r in apply_sampling(df, percent).collect()}
+
+    kept = ids(0.28)
+    assert kept == ids(0.3)           # both 1 in 3
+    assert kept != ids(0.25)          # 1 in 4
+    assert 800 < len(kept) < 1200
+
+
 def test_spatial_query_runs_graduated_guard(spark):
     """SpatialQuery(guard=...) intercepts before planning: over-budget
     queries raise, in-budget queries run, and a sampled tier thins the

@@ -143,6 +143,14 @@ def test_utm_south_and_dispatch(spark):
         crs.reproject(df, 4326, 999999)
 
 
+def test_infer_avro_raises_without_spark_avro(spark, tmp_path):
+    """The avro reader is an external module (not in this pyspark
+    install): infer_avro fails loudly and names the package to add."""
+    from geomesa_spark.sources.ingest import infer_avro
+    with pytest.raises(RuntimeError, match="org.apache.spark:spark-avro"):
+        infer_avro(spark, str(tmp_path / "in.avro"))
+
+
 def test_infer_fixed_width(spark, tmp_path):
     from geomesa_spark.sources.ingest import infer_fixed_width
     p = tmp_path / "fixed.txt"

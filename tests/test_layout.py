@@ -78,6 +78,10 @@ class TestIndexedLayout:
                     .select("event_id").toPandas()["event_id"])
         coarse = set(out.where(pred).select("event_id").toPandas()["event_id"])
         assert exact <= coarse
+        # the same exact refine over the covered scan returns the exact rows
+        refined = set(SpatialQuery(geometry=poly).apply(out.where(pred))
+                      .select("event_id").toPandas()["event_id"])
+        assert refined == exact
 
     def test_sorted_within_files(self, spark, indexed_path):
         # z2-sorted files -> row-group stats can skip; check monotone z2 per file
@@ -836,3 +840,26 @@ def test_ensure_indexed_writes_once(spark, tmp_path):
     t3 = max(os.path.getmtime(os.path.join(r, f))
              for r, _, fs in os.walk(path) for f in fs)
     assert t3 > t1
+
+
+def test_ensure_indexed_rewrites_on_salt_key_change(spark, tmp_path):
+    """Same salt count, different salt key: the stored salt column no
+    longer matches the request, so ensure_indexed must rewrite the layout
+    instead of reusing it."""
+    from geomesa_spark.functions.cell_functions import salt_col
+    from geomesa_spark.sources.layout import ensure_indexed
+    df = spark.createDataFrame(
+        [(i, 10.0 + i * 0.01, 20.0) for i in range(50)],
+        "event_id long, lon double, lat double")
+    path = str(tmp_path / "lay")
+
+    ensure_indexed(df, path, id_col="event_id", n_salts=4, ts_col="none")
+    assert read_manifest(spark, path)["salt_key"] == "event_id"
+    out = ensure_indexed(df, path, n_salts=4, ts_col="none")  # salt by lon
+    assert read_manifest(spark, path)["salt_key"] == "lon"
+    expect = {r.event_id: r.s for r in
+              df.select("event_id", salt_col(F.col("lon"), 4).alias("s"))
+              .collect()}
+    got = out.select("event_id", "salt").collect()
+    assert len(got) == 50
+    assert all(expect[r.event_id] == r.salt for r in got)

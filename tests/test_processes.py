@@ -56,6 +56,17 @@ def test_proximity_join_is_symmetric_prefilter_safe(geo):
     assert got == want
 
 
+def test_haversine_col_null_coordinate_gives_null(spark):
+    """A null coordinate yields a null distance.  Clamping with least()
+    would skip the null and return asin(1) * 2R, about 20,015 km."""
+    df = spark.createDataFrame([(None, 25.0), (46.0, 25.0)],
+                               "lon double, lat double")
+    d = proc.haversine_col(F.col("lon"), F.col("lat"),
+                           F.lit(46.0), F.lit(25.0))
+    got = [r.d for r in df.select(d.alias("d")).collect()]
+    assert got == [None, 0.0]
+
+
 def test_merged_view_dedupes(spark, sf_dir):
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     a = ev.where("event_id % 2 = 0 OR event_id % 7 = 0")
