@@ -22,4 +22,10 @@ Layout:
 
 __version__ = "0.1.0"
 
-from geomesa_spark.session import get_spark, configure  # noqa: F401
+# Python workers import this package when they unpickle an engine UDF; from
+# then on each task skips re-reading every zip directory on sys.path.
+from geomesa_spark import _zipcache
+
+_zipcache.install()
+
+from geomesa_spark.session import get_spark, configure  # noqa: E402,F401

@@ -16,6 +16,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from geomesa_spark.cells.z3 import DAY_MS, WEEK_MS, BinnedTime
+from geomesa_spark.geom.gh_decompose import GEOHASH_KEY_CHARS
 
 # --- Morton spreading with magic masks (identical constants to cells/zn.py) --
 
@@ -72,7 +73,8 @@ def z2_col(lon: Column, lat: Column, precision: int = 31) -> Column:
 _GH_BASE32 = "0123456789bcdefghjkmnpqrstuvwxyz"
 
 
-def geohash_col(lon: Column, lat: Column, chars: int = 7) -> Column:
+def geohash_col(lon: Column, lat: Column,
+                chars: int = GEOHASH_KEY_CHARS) -> Column:
     """Geohash string of ``chars`` base-32 characters — native Catalyst,
     bit-identical to functions/geohash.encode (GeoHash binary subdivision
     == floor-normalize with the upper edge clamped).

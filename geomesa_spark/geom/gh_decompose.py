@@ -43,6 +43,10 @@ from dataclasses import dataclass
 from geomesa_spark.geom import model
 from geomesa_spark.geom.wkt import wkt_loads
 
+# width of the geohash-STRING key a cell='geohash' layout stores
+# (functions.cell_functions.geohash_col); cover_predicate matches that width
+GEOHASH_KEY_CHARS = 7
+
 _BASE32 = "0123456789bcdefghjkmnpqrstuvwxyz"
 
 
@@ -668,16 +672,23 @@ def unique_geohash_substrings(geom, offset: int, length: int,
 
 
 def cover_predicate(col, cells: list[tuple[int, int]]):
-    """Catalyst predicate matching a geohash-STRING column against a
+    """Catalyst predicate matching a geohash-STRING key column against a
     decomposition: per cell, a prefix match on the whole characters plus a
     range check on the partial character — equivalent to the range scans a
     geohash-keyed index would issue, expressed so the optimizer can push
-    it to the scan.  Bounded by the decomposition budget (<= max_size
-    terms), never per-row Python."""
+    it to the scan.  Cells finer than the GEOHASH_KEY_CHARS-character key
+    (decompose_geometry goes to 40 bits) are coarsened to their ancestor at
+    the key's width: a longer prefix never matches a shorter key, and the
+    ancestor keeps the predicate a superset of the cells.  Bounded by the
+    decomposition budget (<= max_size terms), never per-row Python."""
     from pyspark.sql import functions as F
 
+    key_bits = 5 * GEOHASH_KEY_CHARS
+    coarse = dict.fromkeys(
+        (bits >> (prec - key_bits), key_bits) if prec > key_bits
+        else (bits, prec) for bits, prec in cells)
     pred = None
-    for bits, prec in cells:
+    for bits, prec in coarse:
         full, rem = divmod(prec, 5)
         prefix = cell_hash(bits, prec)[:full] if full else ""
         term = F.col(col).startswith(prefix) if prefix else F.lit(True)

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from geomesa_spark.cells import grid
 from geomesa_spark.functions.cell_functions import cell_col
 from geomesa_spark.operators.processes import haversine_col
+from geomesa_spark.sources.arrow_io import local_frame
 
 M_PER_DEG_LAT = 111_195.0  # spherical: pi/180 * R
 
@@ -168,8 +169,8 @@ def _knn_inner(spark, points, query_points, k, lon_col, lat_col, res,
                             cell_col(F.col(lon_col), F.col(lat_col), res)))
     q_cells = {qid: grid.cell_id(qlon, qlat, res) for qid, qlon, qlat in query_points}
     q_pos = {qid: (qlon, qlat) for qid, qlon, qlat in query_points}
-    qdf = spark.createDataFrame([(qid, x, y) for qid, (x, y) in q_pos.items()],
-                                "qid string, qlon double, qlat double")
+    qdf = local_frame(spark, [(qid, x, y) for qid, (x, y) in q_pos.items()],
+                      "qid string, qlon double, qlat double")
     dist = haversine_col(F.col(lon_col), F.col(lat_col), F.col("qlon"), F.col("qlat"))
     w = Window.partitionBy("qid").orderBy("dist_m")
     wq = Window.partitionBy("qid")
@@ -177,7 +178,7 @@ def _knn_inner(spark, points, query_points, k, lon_col, lat_col, res,
     def candidate_topk(cell_rows):
         """Pruned scan restricted to per-qid cell sets → per-qid top-k rows
         (plus ``__cnt``, the pre-rank candidate count per qid)."""
-        cdf = spark.createDataFrame(cell_rows, "qid string, __cell long")
+        cdf = local_frame(spark, cell_rows, "qid string, __cell long")
         return (pruned_scan({c for _, c in cell_rows})
                 .join(F.broadcast(cdf), "__cell")
                 .join(F.broadcast(qdf), "qid")
@@ -242,7 +243,7 @@ def _knn_inner(spark, points, query_points, k, lon_col, lat_col, res,
     exact_rows = [tuple(r[c] for c in out_cols)
                   for qid, rs in best.items() if qid not in topup for r in rs]
     if exact_rows:
-        parts.append(spark.createDataFrame(exact_rows, schema=template.schema))
+        parts.append(local_frame(spark, exact_rows, template.schema))
     if topup:
         final = candidate_topk([(qid, c) for qid, cells in topup.items()
                                 for c in cells]) \
@@ -260,7 +261,7 @@ def knn_brute_force(points: DataFrame, query_points: list[tuple], k: int, *,
                     lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
     """Broadcast nested-loop kNN — the oracle/baseline path."""
     spark = points.sparkSession
-    qdf = spark.createDataFrame(query_points, "qid string, qlon double, qlat double")
+    qdf = local_frame(spark, query_points, "qid string, qlon double, qlat double")
     dist = haversine_col(F.col(lon_col), F.col(lat_col), F.col("qlon"), F.col("qlat"))
     w = Window.partitionBy("qid").orderBy("dist_m")
     return (points.crossJoin(F.broadcast(qdf))

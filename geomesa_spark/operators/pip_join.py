@@ -28,6 +28,7 @@ from geomesa_spark.functions.cell_functions import salt_col
 from geomesa_spark.geom import algos, model, wkt
 from geomesa_spark.geom.wkb import wkb_loads
 from geomesa_spark.plans.cover import geometry_cell_cover, pick_cover_resolution
+from geomesa_spark.sources.arrow_io import local_frame
 
 DEFAULT_SALTS = 4  # geomesa.z.splits default (Conversions.scala:307-318)
 
@@ -71,17 +72,19 @@ def _edges(g) -> tuple[bool, list]:
     return ccw is not None, edges
 
 
-def _refine_sql(lon: str, lat: str) -> str:
-    """Exact boundary-inclusive intersects over the ``__convex`` /
-    ``__edges`` columns built by :func:`_edges`.  Convex: half-plane
+def _refine_sql(lon: str, lat: str, edges: str = "__edges",
+                convex: str = "__convex") -> str:
+    """Exact boundary-inclusive intersects over the ``convex`` / ``edges``
+    expressions built from :func:`_edges` (the ``__convex`` / ``__edges``
+    columns of a join, or literals for one geometry).  Convex: half-plane
     conjunction (cheap forall); general: even-odd ray cast replicating
     algos.points_in_ring term-for-term, one aggregate() — bit-identical to
     the pandas kernel."""
     return f"""
-            IF(__convex,
-              forall(__edges, e -> (e.bx - e.ax) * ({lat} - e.ay)
+            IF({convex},
+              forall({edges}, e -> (e.bx - e.ax) * ({lat} - e.ay)
                                    - (e.by - e.ay) * ({lon} - e.ax) >= 0.0),
-              aggregate(__edges,
+              aggregate({edges},
                 named_struct('i', false, 'b', false),
                 (acc, e) -> named_struct(
                   'i', acc.i != (((e.ay > {lat}) != (e.by > {lat})) AND
@@ -91,6 +94,18 @@ def _refine_sql(lon: str, lat: str) -> str:
                           AND {lon} >= least(e.ax, e.bx) AND {lon} <= greatest(e.ax, e.bx)
                           AND {lat} >= least(e.ay, e.by) AND {lat} <= greatest(e.ay, e.by))),
                 acc -> acc.b OR acc.i))"""
+
+
+def polygon_refine_col(g, lon: str, lat: str):
+    """Exact intersects of the (lon, lat) columns with ONE polygonal
+    geometry: :func:`_refine_sql` over its edges as an ``array<struct>``
+    literal — a native predicate, no Python worker."""
+    convex, edges = _edges(g)
+    lit = "array(" + ", ".join(
+        f"named_struct('ax', {ax!r}D, 'ay', {ay!r}D, 'bx', {bx!r}D, 'by', {by!r}D)"
+        for ax, ay, bx, by in edges) + ")"
+    return F.expr(_refine_sql(lon, lat, edges=lit,
+                              convex="true" if convex else "false"))
 
 
 def _polygons_to_local(polygons) -> list[tuple]:
@@ -239,8 +254,8 @@ def pip_join_broadcast(points: DataFrame, polygons, *, res: int | None = None,
             else:
                 rows.extend((rowmajor(cid), k, False)
                             for cid in geometry_cell_cover(g, res))
-        cover_df = spark.createDataFrame(
-            rows, schema="__cell long, __pidx int, __interior boolean")
+        cover_df = local_frame(
+            spark, rows, "__cell long, __pidx int, __interior boolean")
         cell_expr = (
             f"least(greatest(cast(floor(({lat_col} + 90.0) / 180.0 * {n}) as bigint), 0), {n - 1})"
             f" * {n} + "
@@ -261,8 +276,8 @@ def pip_join_broadcast(points: DataFrame, polygons, *, res: int | None = None,
     if predicate == "intersects" and all(
             isinstance(g, (model.Polygon, model.MultiPolygon)) for g in geoms):
         edge_rows = [(k, polys[k][0], *_edges(g)) for k, g in enumerate(geoms)]
-        edges_df = spark.createDataFrame(
-            edge_rows,
+        edges_df = local_frame(
+            spark, edge_rows,
             f"__pidx int, {poly_id_col} {id_type}, __convex boolean, "
             "__edges array<struct<ax:double,ay:double,bx:double,by:double>>")
         refine = F.expr(_refine_sql(lon_col, lat_col))
@@ -282,8 +297,8 @@ def pip_join_broadcast(points: DataFrame, polygons, *, res: int | None = None,
     boundary = joined.where(~F.col("__interior")).where(
         _refine_indexed_udf(geoms, predicate)(F.col(lon_col), F.col(lat_col),
                                               F.col("__pidx")))
-    id_df = spark.createDataFrame(
-        [(k, pid) for k, (pid, _g, _b) in enumerate(polys)],
+    id_df = local_frame(
+        spark, [(k, pid) for k, (pid, _g, _b) in enumerate(polys)],
         f"__pidx int, {poly_id_col} {id_type}")
     out = (interior.unionByName(boundary)
            .join(F.broadcast(id_df), "__pidx")
@@ -298,8 +313,8 @@ def _attach_geom(spark, out: DataFrame, polys, poly_id_col: str,
     if not keep_geom:
         return out
     from geomesa_spark.geom.wkb import wkb_dumps
-    geom_df = spark.createDataFrame(
-        [(pid, bytearray(wkb_dumps(g))) for pid, g, _b in polys],
+    geom_df = local_frame(
+        spark, [(pid, bytearray(wkb_dumps(g))) for pid, g, _b in polys],
         f"{poly_id_col} {id_type}, __geom binary")
     return out.join(F.broadcast(geom_df), poly_id_col)
 

@@ -7,9 +7,10 @@ index primary + residual (planning/FilterSplitter.scala:61-147):
 * bbox and interval -> native range predicates (pushed to parquet/Iceberg
   scans by Catalyst: PushedFilters + partition pruning),
 * optional z2/cell column -> coarse SFC range predicate (file skipping),
-* polygon refine -> ONE Arrow-batched numpy kernel over (lon, lat) — the
-  'residual filter' — skipped entirely when the query geometry is its own
-  bbox (the reference's exact-ranges shortcut,
+* geometry refine -> the 'residual filter': polygons use pip_join's native
+  ray cast over a literal edge array, other geometries ONE Arrow-batched
+  numpy kernel over (lon, lat); skipped entirely when the query geometry is
+  its own bbox (the reference's exact-ranges shortcut,
   Z3IndexKeySpace.useFullFilter:240-254).
 """
 
@@ -113,9 +114,15 @@ class SpatialQuery:
             # above stays as the row-level recheck
             if self.s2_col is not None and self.s2_col in df.columns:
                 preds.append(cover.s2_range_predicate(F.col(self.s2_col), boxes))
-            # residual exact refine, skipped for rectangles (exact ranges)
+            # residual exact refine, skipped for rectangles (exact ranges);
+            # polygonal geometries refine natively, others in a pandas UDF
             if geom is not None and not _is_rectangle(geom):
-                preds.append(points_in_geometry_udf(geom)(lon, lat))
+                if isinstance(geom, (model.Polygon, model.MultiPolygon)):
+                    from geomesa_spark.operators.pip_join import polygon_refine_col
+                    preds.append(polygon_refine_col(geom, self.lon_col,
+                                                    self.lat_col))
+                else:
+                    preds.append(points_in_geometry_udf(geom)(lon, lat))
 
         if self.dwithin is not None:
             g, d = self.dwithin

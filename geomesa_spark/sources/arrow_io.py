@@ -12,14 +12,50 @@ Arrow-native already, so the surface is thin:
   ArrowScan dictionary-field behavior.
 * ``write_arrow_partitions`` — one IPC file per partition via mapInArrow
   (executor-side, no driver collect) — the bulk-export path.
+* ``local_frame`` — driver-built rows as an Arrow local relation, the
+  import direction operators use for their small broadcast tables.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+import datetime as dt
+from typing import Iterator, Optional, Union
 
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType, StructType, TimestampType
+
+
+def _naive_as_local(v):
+    """A naive datetime means local time, as in ``createDataFrame(list)``;
+    pyarrow would read it as UTC."""
+    if isinstance(v, dt.datetime) and v.tzinfo is None:
+        return v.astimezone(dt.timezone.utc)
+    return v
+
+
+def local_frame(spark: SparkSession, rows: list,
+                schema: Union[StructType, str]) -> DataFrame:
+    """DataFrame of driver-side ``rows`` (tuples in ``schema`` order) built
+    through a pyarrow.Table, so Spark plans a ``LocalTableScan``.
+
+    ``createDataFrame(list)`` plans a ``Scan ExistingRDD`` instead, and
+    every scan of it runs a job of Python tasks.  Not via pandas: pandas
+    turns an int64 column with nulls into float64 and rounds ids > 2^53.
+    Naive datetimes in top-level timestamp columns mean local time, as in
+    ``createDataFrame(list)``; nested ones are read as UTC."""
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    arrays = []
+    for i, (field, afield) in enumerate(zip(schema.fields, arrow_schema)):
+        col = [r[i] for r in rows]
+        if isinstance(field.dataType, TimestampType):
+            col = [_naive_as_local(v) for v in col]
+        arrays.append(pa.array(col, type=afield.type))
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow_schema),
+                                 schema)
 
 
 def to_arrow_table(df: DataFrame, sort_by: Optional[list] = None) -> pa.Table:

@@ -83,6 +83,29 @@ class TestIndexedLayout:
                       .select("event_id").toPandas()["event_id"])
         assert refined == exact
 
+    def test_geohash_layout_small_polygon_finds_rows(self, spark, tmp_path):
+        """A polygon small enough that decompose_geometry's default cover
+        reaches 40-bit (8-character) cells still selects its rows on the
+        layout's 7-character gh key: no prefix longer than the key."""
+        from geomesa_spark.geom.gh_decompose import (cover_predicate,
+                                                     decompose_geometry)
+        from geomesa_spark.plans.query import SpatialQuery
+        src = spark.createDataFrame(
+            [(i, 46.0 + 0.0004 * (i % 10), 25.0 + 0.0004 * (i // 10))
+             for i in range(100)], "event_id long, lon double, lat double")
+        path = str(tmp_path / "gh_small")
+        write_indexed(src, path, cell="geohash")
+        out = read_indexed(spark, path)
+        poly = ("POLYGON ((46.0010 25.0020, 46.0020 25.0010, 46.0030 25.0020, "
+                "46.0020 25.0030, 46.0010 25.0020))")
+        cells = decompose_geometry(poly)
+        assert max(prec for _, prec in cells) > 35  # finer than the key
+        exact = {r.event_id for r in SpatialQuery(geometry=poly).apply(src)
+                 .select("event_id").collect()}
+        coarse = {r.event_id for r in out.where(cover_predicate("gh", cells))
+                  .select("event_id").collect()}
+        assert exact and exact <= coarse
+
     def test_sorted_within_files(self, spark, indexed_path):
         # z2-sorted files -> row-group stats can skip; check monotone z2 per file
         df = read_indexed(spark, indexed_path).withColumn("f", F.input_file_name())
